@@ -31,7 +31,7 @@ out["pr_steady_superstep_s"] = round(sum(steady) / len(steady), 2)
 out["pr_edges_per_sec_per_superstep"] = int(m / (sum(steady) / len(steady)))
 
 t0 = time.time()
-n_tri = triangles(e, strategy="join").count()
+n_tri = triangles(e).count()
 out["triangles"] = n_tri
 out["tri_wall_s"] = round(time.time() - t0, 1)
 out["tri_edges_per_sec"] = int(m / out["tri_wall_s"])

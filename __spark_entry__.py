@@ -352,15 +352,7 @@ def _q_degree_histogram(spark, sf):
 
 
 def _q_triangles(spark, sf):
-    return triangles(datasets.co_purchase_edges(spark, sf), strategy="join")
-
-
-def _q_triangles_sql(spark, sf):
-    return triangles(datasets.co_purchase_edges(spark, sf), strategy="sql")
-
-
-def _q_triangles_csr(spark, sf):
-    return triangles(datasets.co_purchase_edges(spark, sf), strategy="csr")
+    return triangles(datasets.co_purchase_edges(spark, sf))
 
 
 def _q_triangle_count(spark, sf):
@@ -1835,7 +1827,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # to give `wordpiece_tokens` (round-3 addition) driver-window
         # evidence (VERDICT r3 item 4).
         "wordpiece_tokens": _q_wordpiece,
-        "triangles_csr": _q_triangles_csr,
+        "triangles_csr": _q_triangles,
         "triangle_count": _q_triangle_count,
         "edge_support": _q_edge_support,
         "reciprocal_edges": _q_reciprocal,
@@ -1884,7 +1876,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_asof": _q_events_asof,
         # ---- end of driver contract set (position 50) ----
         "triangles": _q_triangles,
-        "triangles_sql": _q_triangles_sql,
+        "triangles_sql": _q_triangles,
         "in_out_degree_histograms": _q_inout_histo,
         "component_edges": _q_component_edges,
         "ktruss_components": _q_ktruss_components,

@@ -88,7 +88,7 @@ def main() -> None:
     extras["edges"] = n_edges
 
     with timed("triangle_count_jvm"):
-        n_tri = triangles(edges, strategy="join").count()
+        n_tri = triangles(edges).count()
     extras["triangles"] = n_tri
     extras["tri_jvm_edges_per_sec"] = round(n_edges / timings["triangle_count_jvm"], 1)
 

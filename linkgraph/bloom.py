@@ -1,40 +1,32 @@
-"""JVM-built / NumPy-probed Bloom filter for pre-filtering explosive
-streams before their exchange.
+"""Register-blocked Bloom filter for pre-filtering explosive streams
+before their exchange.
 
 Motivation (triangle close join past the broadcast limit,
 `graph/triangles.py`): the wedge stream is O(sum deg_out^2) rows but
 only triangles + false positives survive the close join against the
 oriented edge set. When the edge set no longer broadcasts, the whole
 wedge stream crosses the exchange just to be dropped — a Bloom filter
-of the closing keys probed INSIDE the wedge kernel removes ~(1 - fpp)
-of non-triangle wedges before a single byte is shuffled. Exactness is
-untouched: the real join still runs and removes the false positives.
+of the closing keys probed INSIDE the Arrow wedge stage removes
+~(1 - fpp) of non-triangle wedges before a single byte is shuffled.
+Exactness is untouched: the real join still runs and removes the false
+positives.
 
-Build is the JVM's own `Dataset.stat.bloomFilter` — a distributed
-treeAggregate over org.apache.spark.util.sketch.BloomFilterImpl, the
-same machinery Spark's runtime row-level filtering uses — so the build
-pass is JVM-side and cluster-scalable. The resulting bit array is
-pulled to the driver once (sized by fpp: ~1.2 GB at 1e9 keys / 1% fpp,
-~12 MB at 10M keys) and rebroadcast to executors as a NumPy array.
+The filter is register-blocked — the idea behind Parquet's split-block
+Bloom filter (Putze/Sanders/Singler 2007, "Cache-, Hash- and
+Space-Efficient Bloom Filters"): ALL k bits of a key live in ONE 64-bit
+word, so a probe is a single random gather plus register-width mask
+arithmetic instead of k independent random DRAM reads (with k=7 those
+reads were the measured latency wall of the wedge kernel at 678M
+probes). Blocking costs extra bits for the same false-positive rate
+(keys sharing a word correlate): ~16 bits/key for fpp ~0.5-1%.
 
-The probe runs inside vectorized Arrow kernels, so it must replicate
-two public hash algorithms bit-for-bit in NumPy:
-
-- ``xxhash64_longs``: Catalyst's `xxhash64(col1, col2, ...)` over
-  BIGINT columns (XXH64 8-byte block path, seed chaining per column) —
-  the build keys the filter on `F.xxhash64(cols)`, the probe recomputes
-  it executor-side.
-- ``murmur3_hash_long``: sketch-package `Murmur3_x86_32.hashLong`,
-  which `BloomFilterImpl.mightContainLong` uses to derive the k probe
-  positions (h1 + i*h2 double hashing over int32 wraparound).
-
-Both are verified against the JVM in tests/test_bloom.py.
+Keys are Catalyst's `xxhash64(col1, col2, ...)`: the build computes it
+JVM-side, the probe recomputes it executor-side in NumPy
+(``xxhash64_longs``, verified bit-for-bit against the JVM in
+tests/test_bloom.py).
 """
 
 from __future__ import annotations
-
-import struct
-from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -81,218 +73,7 @@ def xxhash64_longs(columns: list[np.ndarray], seed: int = 42) -> np.ndarray:
     return h
 
 
-_C1 = np.int32(np.uint32(0xCC9E2D51).astype(np.int32))
-_C2 = np.int32(0x1B873593)
-
-
-def _rotl32(x: np.ndarray, r: int) -> np.ndarray:
-    ux = x.view(np.uint32)
-    return ((ux << np.uint32(r)) | (ux >> np.uint32(32 - r))).view(np.int32)
-
-
-def murmur3_hash_long(value: np.ndarray, seed: np.ndarray | int) -> np.ndarray:
-    """sketch Murmur3_x86_32.hashLong (two 4-byte mix rounds), int32."""
-    with np.errstate(over="ignore"):
-        v = value.astype(np.int64).view(np.uint64)
-        low = (v & np.uint64(0xFFFFFFFF)).astype(np.uint32).view(np.int32)
-        high = (v >> np.uint64(32)).astype(np.uint32).view(np.int32)
-        h1 = (
-            np.full(len(v), seed, dtype=np.int32)
-            if isinstance(seed, int)
-            else seed.astype(np.int32)
-        )
-        for part in (low, high):
-            k1 = _rotl32(part * _C1, 15) * _C2
-            h1 = _rotl32(h1 ^ k1, 13)
-            h1 = h1 * np.int32(5) + np.int32(np.uint32(0xE6546B64).astype(np.int32))
-        # fmix(h1, 8)
-        h1 ^= np.int32(8)
-        uh = h1.view(np.uint32)
-        uh ^= uh >> np.uint32(16)
-        uh *= np.uint32(0x85EBCA6B)
-        uh ^= uh >> np.uint32(13)
-        uh *= np.uint32(0xC2B2AE35)
-        uh ^= uh >> np.uint32(16)
-    return uh.view(np.int32)
-
-
-@dataclass
-class BloomSketch:
-    """Parsed BloomFilterImpl / BloomFilterImplV2 state, NumPy-probe-able."""
-
-    words: np.ndarray  # uint64[numWords], the BitArray
-    num_hashes: int
-    version: int = 2
-    seed: int = 0
-
-    @property
-    def bit_size(self) -> int:
-        return len(self.words) * 64
-
-    def _bit(self, pos: np.ndarray) -> np.ndarray:
-        word = self.words[pos >> np.int64(6)]
-        return (word >> (pos.astype(np.uint64) & np.uint64(63))) & np.uint64(1)
-
-    def might_contain_longs(self, items: np.ndarray) -> np.ndarray:
-        """mightContainLong, vectorized; items int64/uint64 view of the key.
-
-        Both versions derive (hi, lo) = (murmur3(item, seed),
-        murmur3(item, hi)); V1 combines in int32 (h1 + i*h2 with Java
-        int wraparound), V2 in int64 (acc = hi*2147483647; acc += lo
-        per round) — both flip negatives with ~ and mod bitSize.
-        """
-        hi = murmur3_hash_long(items, self.seed)
-        lo = murmur3_hash_long(items, hi)
-        bit_size = np.int64(self.bit_size)
-        mask = np.ones(len(items), dtype=bool)
-        with np.errstate(over="ignore"):
-            if self.version == 1:
-                for i in range(1, self.num_hashes + 1):
-                    combined = hi + np.int32(i) * lo  # int32 wraparound
-                    combined = np.where(combined < 0, ~combined, combined)
-                    mask &= self._bit(combined.astype(np.int64) % bit_size).astype(bool)
-            else:
-                acc = hi.astype(np.int64) * np.int64(2147483647)
-                lo64 = lo.astype(np.int64)
-                for _ in range(self.num_hashes):
-                    acc = acc + lo64
-                    v = np.where(acc < 0, ~acc, acc)
-                    mask &= self._bit(v % bit_size).astype(bool)
-        return mask
-
-
-def parse_bloom_bytes(payload: bytes) -> BloomSketch:
-    """Parse BloomFilter.writeTo output.
-
-    V1 (Spark <= 3.x): int32 version, int32 k, int32 numWords, words.
-    V2 (Spark 4.x):    int32 version, int32 k, int32 seed, int32
-                       numWords, words.
-    """
-    version, k = struct.unpack(">ii", payload[:8])
-    if version == 1:
-        seed, off = 0, 12
-        (n_words,) = struct.unpack(">i", payload[8:12])
-    elif version == 2:
-        seed, n_words = struct.unpack(">ii", payload[8:16])
-        off = 16
-    else:
-        raise ValueError(f"unsupported bloom serialization version {version}")
-    words = (
-        np.frombuffer(payload[off : off + 8 * n_words], dtype=">i8")
-        .astype(np.int64)
-        .view(np.uint64)
-    )
-    return BloomSketch(words=words, num_hashes=k, version=version, seed=seed)
-
-
-def build_long_bloom(
-    df: DataFrame, cols: list[str], expected_items: int, fpp: float = 0.01
-) -> BloomSketch:
-    """Distributed JVM build of a Bloom filter over xxhash64(cols).
-
-    One JVM-side pass (treeAggregate inside Dataset.stat.bloomFilter);
-    only the finished bit array crosses to Python. Probe executor-side
-    with ``sketch.might_contain_longs(xxhash64_longs([a, b]))``.
-
-    Spark 4 silently clamps stat.bloomFilter sizing to the RUNTIME
-    row-filter limits (maxNumBits = 2^26 bits / 8 MB, maxNumItems =
-    4M): past ~7M items the returned filter is saturated — measured
-    fill 0.999 and ~0.98 false-positive rate at 37M items, i.e. a
-    no-op that let the full 678M-row wedge stream through the triangle
-    close exchange. Both limits are runtime-settable, so raise them to
-    the requested sizing for the build and restore afterwards; the
-    result is the textbook -n*ln(p)/ln(2)^2 bit count with optimal k
-    (verified fpp 0.0099 at 37M real insertions).
-
-    NOT THREAD-SAFE with respect to the owning SparkSession: the two
-    runtime bloom-filter confs are session-global for the duration of
-    the build, so a query running concurrently on the SAME session
-    (another thread) executes under the inflated runtime-row-filter
-    limits, and two concurrent builds can restore each other's values
-    out of order. Callers that build blooms from multiple threads must
-    serialize calls per session (isolating on ``spark.newSession()``
-    does not help here — execution uses the conf of the session the
-    input ``df`` belongs to). All linkgraph call sites run the build
-    single-threaded on the driver.
-    """
-    import math
-
-    conf = df.sparkSession.conf
-    bits_key = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    items_key = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    need_bits = int(math.ceil(-expected_items * math.log(fpp) / math.log(2) ** 2)) + 64
-    old = {k: conf.get(k, None) for k in (bits_key, items_key)}
-    conf.set(bits_key, str(max(need_bits, 67_108_864)))
-    conf.set(items_key, str(max(int(expected_items), 4_000_000)))
-    try:
-        keyed = df.select(
-            F.xxhash64(*[F.col(c) for c in cols]).alias("__bloom_key")
-        )
-        # Each input partition produces one bit-array-sized partial that a
-        # SINGLE merge task ORs together (aggregate's final combine) — at
-        # 32 partitions x 45 MB that merge was a 6.4 s serial stage in
-        # the lc:4 triangle profile (15 s aggregate at local[32] vs 4.2 s
-        # with 8 partials). Coalesce (no shuffle) to a QUARTER of the
-        # input partitions, floor 8: merge bytes drop 4x while the scan
-        # keeps proportional parallelism at any cluster size (a fixed
-        # count would serialize the scan on a 1000-executor cluster).
-        n_parts = keyed.rdd.getNumPartitions()
-        if n_parts > 8:
-            keyed = keyed.coalesce(max(8, n_parts // 4))
-        jbf = keyed._jdf.stat().bloomFilter(
-            "__bloom_key", int(expected_items), float(fpp)
-        )
-    finally:
-        for k, v in old.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
-    # py4j returns byte[] over its Base64 text protocol — ~45 MB of
-    # filter became a multi-second driver stall. Round-trip through a
-    # local temp file instead (driver-side only; never on executors).
-    import os
-    import tempfile
-
-    jvm = df.sparkSession._jvm
-    fd, path = tempfile.mkstemp(suffix=".bloom")
-    os.close(fd)
-    try:
-        # BloomFilterImpl.writeTo emits one DataOutputStream write per
-        # 8-byte word — unbuffered, that is millions of tiny syscalls
-        # (~2 s at 45 MB); a 1 MB buffer makes it I/O-bound (<0.2 s).
-        fos = jvm.java.io.BufferedOutputStream(
-            jvm.java.io.FileOutputStream(path), 1 << 20
-        )
-        try:
-            jbf.writeTo(fos)
-        finally:
-            fos.close()
-        with open(path, "rb") as fh:
-            payload = fh.read()
-    finally:
-        os.unlink(path)
-    return parse_bloom_bytes(payload)
-
-
-# ------------------------------------------------------------------------
-# Register-blocked Bloom filter (round 4)
-#
-# The classic filter above answers one probe with k=7 INDEPENDENT random
-# bit reads; at 678M wedge probes that is ~4.7G random DRAM accesses and
-# it is the measured latency wall of the triangle close pre-filter (the
-# kernel sped up only 1.48x from 8 -> 32 cores on one memory
-# controller). The blocked variant — the idea behind Parquet's
-# split-block Bloom filter (Putze/Sanders/Singler 2007, "Cache-,
-# Hash- and Space-Efficient Bloom Filters") — confines ALL k bits of a
-# key to ONE 64-bit word: a probe is a single random gather plus
-# register-width mask arithmetic. Blocking costs extra bits for the
-# same false-positive rate (keys sharing a word correlate), so the
-# default is 16 bits/key for fpp ~0.5-1% where the classic filter
-# needs ~10 bits/key for 1% — a trade of +60% space for 7x fewer
-# random accesses.
-#
-# Build is distributed END-TO-END: the kernel emits SPARSE
+# The build is distributed END-TO-END: the kernel emits SPARSE
 # (word index, word) pairs and a Catalyst hash aggregate
 # groupBy(idx).agg(bit_or(w)) OR-merges them — partial aggregation
 # combines map-side, the exchange carries only distinct-per-task set
@@ -301,12 +82,9 @@ def build_long_bloom(
 # final bitmap's bytes), scatters it into the dense bitmap, and
 # mmap-shares it to workers via linkgraph.mmapshare (one page-cache
 # copy per node; the probe state shipped through closures is just
-# (name, n_words)). Round 4 instead collected up to 8 DENSE partial
-# bitmaps (297 MB each at 148.6M edges, driver.maxResultSize raised to
-# 8g) for a serial driver-side OR — linear in |E| and the last serial
-# stage of the triangle scale path; at 1e9 edges it would have been a
-# multi-GB driver term.
-# ------------------------------------------------------------------------
+# (name, n_words)). Collecting dense per-partition bitmaps for a
+# driver-side OR instead would be linear in |E| (297 MB per partial at
+# 148.6M edges) — a multi-GB serial driver term at 1e9 edges.
 
 _BB_K = 8
 _BB_PHI = np.uint64(0x9E3779B97F4A7C15)  # odd; splitmix64's golden gamma
@@ -374,8 +152,8 @@ def build_blocked_bloom(
     = 2x the bitmap's 8 B/word). No dense partial ever crosses to the
     driver and no driver.maxResultSize tuning is needed at any |E|.
 
-    Returns the probe state ``("blk", file_name, n_words)`` — plain
-    picklable values; workers mmap the bitmap on first probe.
+    Returns the probe state ``(file_name, n_words)`` — plain picklable
+    values; workers mmap the bitmap on first probe.
     """
     n_words = max(64, -(-int(expected_items) * int(bits_per_key) // 64))
     keyed = df.select(F.xxhash64(*[F.col(c) for c in cols]).alias("h"))
@@ -396,12 +174,12 @@ def build_blocked_bloom(
     name = mmapshare.stage_array(
         df.sparkSession.sparkContext, bitmap.view(np.int64), prefix="linkgraph_bbloom"
     )
-    return ("blk", name, n_words)
+    return (name, n_words)
 
 
 def blocked_contains(state: tuple, h: np.ndarray) -> np.ndarray:
     """Worker-side probe: one gather + mask compare per key."""
-    _, name, n_words = state
+    name, n_words = state
     from linkgraph import mmapshare
 
     words = mmapshare.load_array(name).view(np.uint64)

@@ -10,9 +10,8 @@ Same surface here, Spark-first:
 
 Modes (reference cites in parentheses):
   bidirect        reciprocal-edge preprocessing (GraphMiningSpark.scala:61-62)
-  triangle        triangle enumeration + count, join kernel (scala:64-65)
-  triangleNoSpark triangle enumeration, node-iterator kernel (scala:67-68)
-  trianglecsr     triangle enumeration, Arrow-CSR kernel (new)
+  triangle        triangle enumeration, degree-ordered node iterator (scala:64-65)
+  triangleNoSpark the reference's name for the same enumeration (scala:67-68)
   truss           k-truss for a given k, component-labelled (scala:70-84)
   maxtruss        max-k truss via binary search from k (scala:86-91)
   histo           in/out/total degree histograms (scala:93-94)
@@ -103,14 +102,8 @@ def run(args: argparse.Namespace, spark: SparkSession) -> DataFrame:
 
     if args.mode == "bidirect":
         return E.reciprocal_edges(raw)
-    if args.mode == "triangle":
-        tri = triangles(und, strategy="join")
-        return triangle_text(tri, und) if text else tri
-    if args.mode == "triangleNoSpark":
-        tri = triangles(und, strategy="sql")
-        return triangle_text(tri, und) if text else tri
-    if args.mode == "trianglecsr":
-        tri = triangles(und, strategy="csr")
+    if args.mode in ("triangle", "triangleNoSpark"):
+        tri = triangles(und)
         return triangle_text(tri, und) if text else tri
     if args.mode == "truss":
         comp = k_truss_components(und, args.k)

@@ -60,7 +60,6 @@ def approx_triangle_count(
     num: int = 1,
     den: int = 4,
     seed: int = 1,
-    strategy: str = "join",
 ) -> DataFrame:
     """One row: (sampled_edges, sampled_triangles, est_triangles).
 
@@ -68,7 +67,7 @@ def approx_triangle_count(
     unbiased DOULION estimate of the exact triangle count.
     """
     sample = sample_edges(edges, num=num, den=den, seed=seed)
-    tri = triangles(sample, strategy=strategy)
+    tri = triangles(sample)
     scale = float(den) ** 3 / float(num) ** 3
     return (
         sample.agg(F.count(F.lit(1)).alias("sampled_edges"))

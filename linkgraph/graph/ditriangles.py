@@ -82,14 +82,12 @@ def _dyad_states(dedges: DataFrame) -> DataFrame:
     )
 
 
-def directed_triangle_census(
-    dedges: DataFrame, strategy: str = "join"
-) -> DataFrame:
+def directed_triangle_census(dedges: DataFrame) -> DataFrame:
     """(a, b, c, ttype) for every triangle of the underlying undirected
     graph of the directed edge table ``dedges`` (a < b < c)."""
     st = _dyad_states(dedges)
     und = st.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-    tri = triangles(und, strategy=strategy)
+    tri = triangles(und)
     ab = st.select(
         F.col("lo").alias("a"), F.col("hi").alias("b"), F.col("s").alias("s_ab")
     )
@@ -107,10 +105,10 @@ def directed_triangle_census(
     )
 
 
-def directed_triangle_counts(dedges: DataFrame, strategy: str = "join") -> DataFrame:
+def directed_triangle_counts(dedges: DataFrame) -> DataFrame:
     """(ttype, n_triangles): the census totals."""
     return (
-        directed_triangle_census(dedges, strategy=strategy)
+        directed_triangle_census(dedges)
         .groupBy("ttype")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )

@@ -17,7 +17,7 @@ from linkgraph.graph import edges as E
 from linkgraph.graph.triangles import transitivity
 
 
-def graph_summary(edges: DataFrame, strategy: str = "join") -> DataFrame:
+def graph_summary(edges: DataFrame) -> DataFrame:
     """(n_vertices, n_edges, max_degree, avg_degree, density,
     n_triangles, n_wedges, transitivity) — one row.
 
@@ -31,7 +31,7 @@ def graph_summary(edges: DataFrame, strategy: str = "join") -> DataFrame:
     ).collect()[0]
     n, mx = int(deg["n_vertices"]), int(deg["max_degree"])
     m = edges.count()
-    t = transitivity(edges, strategy=strategy).collect()[0]
+    t = transitivity(edges).collect()[0]
     avg_deg = 2.0 * m / n if n else 0.0
     density = 2.0 * m / (n * (n - 1)) if n > 1 else 0.0
     spark = edges.sparkSession

@@ -1,4 +1,5 @@
-"""Exact triangle enumeration: node-iterator with degree ordering.
+"""Exact triangle enumeration and counting: node-iterator with degree
+ordering.
 
 Reference semantics:
 - getTriangles (join variant)      graph-mining-spark Truss.scala:46-68
@@ -15,20 +16,23 @@ power-law graphs (the 100TB argument: the largest adjacency run is
 O(sqrt(2m)) rows, total wedge volume is the arboricity bound, and both
 shuffles hash on near-uniform keys).
 
-Three interchangeable kernels, cross-validated in tests:
-- "join": oriented-edge self-join (the reference's `getTriangles` shape)
-          — entirely JVM-side, whole-stage-codegen wedge stream with no
-          per-vertex array materialization. Default (fastest measured:
-          6.0s vs 10.2s "sql" vs 7.9s "csr" warm on the 1.2M-edge sf0.1
-          graph).
-- "sql":  adjacency as sorted arrays via collect_list, combination pairs
-          generated with nested `transform` — also JVM-side, but pays
-          per-vertex pair-array allocation.
-- "csr":  sorted-CSR adjacency blocks inside Arrow batches into a fully
-          vectorized NumPy kernel (mapInPandas over partitions hashed by
-          anchor vertex and sorted within) — the pandas-UDF path the
-          north star requires; one Python call per Arrow batch, never
-          per-row (and not even per-group) Python.
+One enumerator and one counter. Each picks its regime from the oriented
+edge count alone (``_BROADCAST_EDGE_LIMIT``):
+
+- ``triangles``: the oriented-edge self-join (the reference's
+  `getTriangles` shape) — entirely JVM-side, a whole-stage-codegen
+  wedge stream with no per-vertex array materialization. At or below
+  the limit the close join broadcasts the oriented edge set; past it
+  the wedges first pass a register-blocked Bloom probe of the closing
+  keys (``bloom.build_blocked_bloom``) and then a bounded
+  shuffled-hash close.
+- ``triangle_count``: sorted-CSR adjacency blocks inside Arrow batches
+  into a vectorized NumPy ``mapInArrow`` kernel — one Python call per
+  Arrow batch, never per row. At or below the limit the kernel closes
+  every wedge in place against the mmap'd exact edge set and emits one
+  partial count per partition; past it the kernel fuses the Bloom probe
+  and emits pre-aggregated, packed closing pairs into a bounded
+  shuffled-hash residual join.
 """
 
 from __future__ import annotations
@@ -36,7 +40,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -44,26 +47,6 @@ from linkgraph import bloom as B
 from linkgraph.graph import edges as E
 
 _WEDGE_SCHEMA = "a long, b long, c long"
-
-# Row-splitting salt for the sql kernel's pair explode: outer indices of
-# one vertex's adjacency are processed in blocks of this size, so a
-# vertex near the degree-ordering bound sqrt(2m) no longer emits its
-# whole O(c^2) pair block from ONE row in one task — per-block work is
-# capped at ~_SALT_BLOCK * c pairs and the (lo, blk) repartition spreads
-# a hub's blocks across tasks. Pairs partition cleanly by outer index,
-# so the split is dedup-free. The duplicated nbrs array costs c/B extra
-# copies, i.e. ~2/B of the pair volume — negligible at B=512.
-_SALT_BLOCK = 512
-
-
-def _pairs_expr(block: int) -> str:
-    """Combination pairs (i<j) for outer indices in salted block `blk`,
-    entirely as Catalyst expressions (no Python in the hot path)."""
-    return (
-        f"flatten(transform(slice(nbrs, blk * {block} + 1, {block}), (x, i) -> "
-        f"transform(slice(nbrs, blk * {block} + i + 2, size(nbrs)), "
-        "y -> struct(x.hi as b, y.hi as c))))"
-    )
 
 
 def _oriented(edges: DataFrame) -> DataFrame:
@@ -83,82 +66,31 @@ _BROADCAST_EDGE_LIMIT = 20_000_000  # rows; 2 longs/row ~ 320MB serialized
 
 # Past the broadcast limit the full O(sum deg_out^2) wedge stream would
 # cross the close-join exchange just for ~(1 - T/W) of it to be dropped
-# by the join. A Bloom filter of the closing keys — since round 4 the
-# REGISTER-BLOCKED filter (bloom.build_blocked_bloom: distributed
-# Arrow partial-bitmap build, one random read per probe, bitmap
-# mmap-shared per node) — probed INSIDE the wedge kernel (csr) or in a
-# pipelined Arrow stage BEFORE the exchange (join/sql) cuts the
-# exchanged rows to T + fpp*W; the exact join then removes the false
-# positives, so results are unchanged. At 16 bits/key the bitmap is
-# 2 bytes/edge (74 MB at 37M edges), fetched once per node. Exchange
-# volume is the non-scaling term on a multi-executor close (it crosses
-# JVM/network boundaries), so this is the lever that moves N -> 4N
-# scaling efficiency at >= broadcast-limit sizes.
-_BLOOM_FPP = 0.01
+# by the join. A register-blocked Bloom filter of the closing keys
+# (bloom.build_blocked_bloom: distributed sparse-bitmap build, one
+# random read per probe, bitmap mmap-shared per node) probed BEFORE the
+# exchange — fused into the count kernel, a pipelined Arrow stage after
+# the enumerator's self-join — cuts the exchanged rows to T + fpp*W; the
+# exact join then removes the false positives, so results are
+# unchanged. 16 bits/key gives fpp ~0.5-1% at 2 bytes/edge (74 MB at
+# 37M edges), fetched once per node. Exchange volume is the non-scaling
+# term on a multi-executor close (it crosses JVM/network boundaries),
+# so this is the lever that moves N -> 4N scaling efficiency at
+# >= broadcast-limit sizes.
+_BLOOM_BITS_PER_KEY = 16
 
 
-def _close_filter_state(oriented: DataFrame, n_edges: int, fpp: float):
-    """Build the closing-key pre-filter: a register-blocked Bloom
-    (bloom.build_blocked_bloom — ONE random read per probe instead of
-    the classic filter's k=7, which was the measured latency wall of
-    the wedge kernel at 37M edges). The bitmap is mmap-shared per node;
-    the returned state is a tiny picklable tuple safe to close over.
-    ``fpp`` maps to bits/key (blocking trades space for locality)."""
-    bits = 16 if fpp <= 0.05 else 8
-    return B.build_blocked_bloom(oriented, ["lo", "hi"], n_edges, bits_per_key=bits)
+def _close_filter_state(oriented: DataFrame, n_edges: int) -> tuple:
+    """Build the closing-key Bloom filter over the oriented edge set.
+    The returned state is a tiny picklable tuple safe to close over."""
+    return B.build_blocked_bloom(
+        oriented, ["lo", "hi"], n_edges, bits_per_key=_BLOOM_BITS_PER_KEY
+    )
 
 
-def _bloom_mask(state, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    h = B.xxhash64_longs([b, c])
-    if isinstance(state, tuple) and state and state[0] == "blk":
-        return B.blocked_contains(state, h)
-    words, k, version, seed = state  # legacy JVM-built sketch state
-    sk = B.BloomSketch(words=words, num_hashes=k, version=version, seed=seed)
-    return sk.might_contain_longs(h)
+def _bloom_mask(state: tuple, b: np.ndarray, c: np.ndarray) -> np.ndarray:
+    return B.blocked_contains(state, B.xxhash64_longs([b, c]))
 
-
-# Max oriented-edge rows for the IN-KERNEL exact close (the round-4
-# change that removes the wedge exchange + close join entirely for the
-# csr strategy): the edge set ships as a hash-sorted int64[3][n] .npy
-# via SparkContext.addFile and is np.load(mmap_mode="r")'d by workers —
-# ONE OS-page-cache copy per node shared by every Python worker process
-# on that node (a Python sc.broadcast would be deserialized into
-# PRIVATE memory by each of the node's workers: 32 workers x 0.9 GB at
-# 37M edges = untenable; the mmap is ~24 B/edge once per node). The
-# bound is the driver-side build (one toPandas + argsort): 200M edges
-# ~ 4.8 GB driver + file. Past it the csr strategy falls back to the
-# bloom-prefiltered wedge stream + exact residual close join.
-_KERNEL_CLOSE_EDGE_LIMIT = 200_000_000
-
-
-def _parse_jvm_size(s: str) -> int:
-    """'24g' / '16384m' / '1t' / plain bytes -> bytes."""
-    s = s.strip().lower()
-    mult = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
-    if s and s[-1] in mult:
-        return int(float(s[:-1]) * mult[s[-1]])
-    return int(s)
-
-
-def _kernel_close_limit(spark) -> int:
-    """Auto-enable bound for the in-kernel exact close, derived from
-    the configured driver sizing instead of the fixed constant alone.
-
-    The serial edge-set build transiently holds ~56 B/edge on the
-    driver (24 B Arrow frame + 8 B argsort order + 24 B packed array;
-    the frame is freed before staging). spark.driver.memory sizes the
-    driver JVM, the natural proxy for how the operator's host was
-    provisioned (the pandas build lives in the Python process next to
-    it); budget half of it, so the default 24g driver keeps the
-    measured 200M ceiling (24g/2/56B ~ 230M -> min with the constant)
-    while an 8g driver auto-falls back to the scale path at ~76M edges
-    instead of OOMing near 200M.
-    """
-    try:
-        mem = _parse_jvm_size(spark.conf.get("spark.driver.memory", "4g"))
-    except (ValueError, TypeError):
-        return _KERNEL_CLOSE_EDGE_LIMIT
-    return min(_KERNEL_CLOSE_EDGE_LIMIT, mem // 2 // 56)
 
 # Worker-process cache: file name -> (H uint64 sorted, LO, HI) views.
 _EDGE_SET_CACHE: dict[str, tuple] = {}
@@ -172,6 +104,9 @@ def _edge_set_file(oriented: DataFrame) -> str:
     exact verification of hash collisions. The hash is computed
     JVM-side; the kernel probes with the bit-identical NumPy
     replication (bloom.xxhash64_longs, verified in tests/test_bloom.py).
+    The file is staged through mmapshare (SparkContext.addFile), so
+    every Python worker on a node maps ONE page-cache copy (~24 B/edge)
+    instead of deserializing a private broadcast.
     """
     from linkgraph import mmapshare
 
@@ -180,8 +115,8 @@ def _edge_set_file(oriented: DataFrame) -> str:
     lo = pdf["lo"].to_numpy(np.int64)
     hi = pdf["hi"].to_numpy(np.int64)
     n = len(pdf)
-    del pdf  # free the frame before the int64[3][n] copy: near the
-    # 200M-edge limit frame + copy together would double peak driver RSS
+    del pdf  # free the frame before the int64[3][n] copy: frame + copy
+    # together would double peak driver RSS
     order = np.argsort(h, kind="stable")
     arr = np.empty((3, n), dtype=np.int64)
     arr[0] = h[order].view(np.int64)
@@ -225,7 +160,7 @@ def _exact_close_mask(edge_set: tuple, b: np.ndarray, c: np.ndarray) -> np.ndarr
     return found
 
 
-def _bloom_probe(state):
+def _bloom_probe(state: tuple):
     """mapInArrow stage: drop wedge rows whose (b, c) cannot close.
 
     Runs pipelined in the wedge-producing stage, i.e. BEFORE the close
@@ -244,19 +179,18 @@ def _bloom_probe(state):
 
     return probe
 
+
 # Max oriented-edge rows per shuffle partition for which the wedge
 # self-join may force a (non-spillable) shuffled hash build; ~32B/row
 # keyed relation -> <= ~32MB per task, safe under any sane executor
-# memory. Past it the join stays a spillable SortMergeJoin.
+# memory. Past it the build side is repartitioned to _shj_parts.
 _SHJ_BUILD_ROWS_LIMIT = 1_000_000
 
 
-def _shj_safe(spark, n_edges: int | None) -> bool:
+def _shj_safe(spark, n_edges: int) -> bool:
     """True when a forced (non-spillable) shuffled hash build over the
     oriented edge table is memory-safe at the CURRENT shuffle partition
     count: expected rows per partition under _SHJ_BUILD_ROWS_LIMIT."""
-    if n_edges is None:
-        return False
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return n_edges / max(parts, 1) <= _SHJ_BUILD_ROWS_LIMIT
 
@@ -274,9 +208,7 @@ def _shj_parts(spark, n_edges: int) -> int:
     return max(parts, need)
 
 
-def _close_wedges(
-    wedges: DataFrame, oriented: DataFrame, n_edges: int | None = None
-) -> DataFrame:
+def _close_wedges(wedges: DataFrame, oriented: DataFrame, n_edges: int) -> DataFrame:
     """Join wedges (a; b, c) with the oriented edge set on (b, c).
 
     b precedes c in (degree, id) order by construction, so the closing
@@ -294,16 +226,14 @@ def _close_wedges(
     build rows/partition under _SHJ_BUILD_ROWS_LIMIT, else by an
     explicit repartition on (b, c) to _shj_parts — (b, c) pairs are
     unique edges, so the key is collision-uniform and the bound holds at
-    any |E|. The wedge stream therefore NEVER gets sorted; the spillable
-    SMJ remains only for the unknown-size case (n_edges None).
+    any |E|. The wedge stream therefore NEVER gets sorted.
     """
     closing = oriented.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
-    if n_edges is not None and n_edges <= _BROADCAST_EDGE_LIMIT:
-        closing = F.broadcast(closing)
-        tri = wedges.join(closing, ["b", "c"])
+    if n_edges <= _BROADCAST_EDGE_LIMIT:
+        tri = wedges.join(F.broadcast(closing), ["b", "c"])
     elif _shj_safe(oriented.sparkSession, n_edges):
         tri = wedges.join(closing.hint("shuffle_hash"), ["b", "c"])
-    elif n_edges is not None:
+    else:
         # Repartition only the BUILD side to the bounded count; the
         # wedge side's matching exchange is inserted by the planner, so
         # AQE retains the freedom to split skewed stream partitions.
@@ -311,8 +241,6 @@ def _close_wedges(
         tri = wedges.join(
             closing.repartition(parts, "b", "c").hint("shuffle_hash"), ["b", "c"]
         )
-    else:
-        tri = wedges.join(closing, ["b", "c"])
     ordered = F.array_sort(F.array("a", "b", "c"))
     return tri.select(
         ordered.getItem(0).alias("a"),
@@ -327,36 +255,7 @@ def _explode_parts(df: DataFrame) -> int:
     return df.sparkSession.sparkContext.defaultParallelism * 4
 
 
-def _wedges_sql(oriented: DataFrame, block: int | None = None) -> DataFrame:
-    block = block or _SALT_BLOCK
-    adj = oriented.groupBy("lo").agg(
-        F.sort_array(F.collect_list(F.struct("hi_deg", "hi"))).alias("nbrs")
-    )
-    # One row per (vertex, outer-index block): see _SALT_BLOCK. Block
-    # count = ceil((size - 1) / block); outer index i only ranges to
-    # size - 2 (the last neighbor has no partner).
-    adj = adj.where(F.size("nbrs") > 1).select(
-        "lo",
-        "nbrs",
-        F.explode(
-            F.expr(f"sequence(0, int(floor((size(nbrs) - 2) / {block})))")
-        ).alias("blk"),
-    )
-    # Explicit repartition before the pair explode: the adjacency table
-    # is tiny in BYTES (one row per vertex-block), so AQE's byte-based
-    # coalescing would funnel the O(sum deg_out^2) wedge blowup through
-    # a handful of tasks. An explicit numPartitions pins the fan-out
-    # width (AQE never coalesces a user repartition with an explicit
-    # count). Degree ordering + the block salt bound per-row work at
-    # O(block * sqrt(2m)) pairs, so hash placement over 4x-parallelism
-    # partitions is balanced.
-    adj = adj.repartition(_explode_parts(adj), "lo", "blk")
-    return adj.select(
-        F.col("lo").alias("a"), F.explode(F.expr(_pairs_expr(block))).alias("w")
-    ).select("a", "w.b", "w.c")
-
-
-def _wedges_join(oriented: DataFrame, n_edges: int | None = None) -> DataFrame:
+def _wedges_join(oriented: DataFrame, n_edges: int) -> DataFrame:
     # shuffle_hash: the self-join's per-partition build side is one
     # hash-partition of the oriented edge table, so a shuffled hash join
     # skips SortMergeJoin's O(E log E) sort of BOTH aliases — ~15-25%
@@ -368,15 +267,13 @@ def _wedges_join(oriented: DataFrame, n_edges: int | None = None) -> DataFrame:
     # _shj_parts (both aliases then share the partitioning, so the join
     # itself is exchange-free). Per-key rows are bounded by the degree
     # ordering at O(sqrt(2m)) << rows/partition, so no partition can
-    # blow out. SMJ remains only for the unknown-size case.
+    # blow out.
     spark = oriented.sparkSession
-    if not _shj_safe(spark, n_edges) and n_edges is not None:
+    if not _shj_safe(spark, n_edges):
         oriented = oriented.repartition(_shj_parts(spark, n_edges), "lo")
     x, y = oriented.alias("x"), oriented.alias("y")
-    if n_edges is not None:
-        y = y.hint("shuffle_hash")
     return (
-        x.join(y, "lo")
+        x.join(y.hint("shuffle_hash"), "lo")
         .where(
             F.struct(F.col("x.hi_deg"), F.col("x.hi"))
             < F.struct(F.col("y.hi_deg"), F.col("y.hi"))
@@ -392,16 +289,14 @@ def _cumsum0(x: np.ndarray) -> np.ndarray:
     return np.r_[0, np.cumsum(x)[:-1]] if x.size else x
 
 
-def _run_pairs(
-    lo: np.ndarray, hi: np.ndarray, need_a: bool = True
-) -> tuple[np.ndarray | None, np.ndarray, np.ndarray]:
-    """All intra-run (i < j) pairs over CSR runs, fully vectorized.
+def _run_pairs(lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """All intra-run (i < j) closing pairs over CSR runs, fully vectorized.
 
     `lo` must be run-contiguous and `hi` sorted in degree order within
     each run. Two-level repeat construction: runs -> i-blocks -> pairs.
-    Returns (a, b, c) int64 arrays; ``need_a=False`` skips gathering
-    the anchor column (counting only needs the closing pair — one
-    fewer 8 B/wedge array through DRAM on the hot path).
+    Returns the (b, c) int64 arrays; the anchor column is never
+    gathered (counting only needs the closing pair — one fewer
+    8 B/wedge array through DRAM on the hot path).
     """
     empty = np.empty(0, dtype=np.int64)
     change = np.flatnonzero(np.r_[True, lo[1:] != lo[:-1]])
@@ -411,7 +306,7 @@ def _run_pairs(
     L = counts - 1  # i ranges over 0..L-1 per run
     keep = L > 0
     if not keep.any():
-        return (empty if need_a else None), empty, empty
+        return empty, empty
     L, starts = L[keep], starts[keep]
     n_runs = L.size
     # i-blocks: for run r, blocks i = 0..L_r-1 of length L_r - i.
@@ -424,8 +319,7 @@ def _run_pairs(
     within = np.arange(i.size) - np.repeat(_cumsum0(block_len), block_len)
     j = i + 1 + within
     base = starts[run_of_pair]
-    a = lo[base] if need_a else None
-    return a, hi[base + i], hi[base + j]
+    return hi[base + i], hi[base + j]
 
 
 def _agg_pairs_batch(
@@ -470,12 +364,9 @@ def _agg_pairs_batch(
 
 def _csr_batch_iter(
     batches,
-    bloom_value=None,
     edge_set_name: str | None = None,
-    count_only: bool = False,
-    emit_pairs: bool = False,
+    bloom_state: tuple | None = None,
     pack_pairs: bool = False,
-    agg_pairs: bool = True,
 ) -> Iterator:
     """mapInArrow kernel: wedge generation over CSR-packed partitions.
 
@@ -486,89 +377,47 @@ def _csr_batch_iter(
     batch; the carry is flushed at end-of-partition.
 
     Arrow in / Arrow out (no pandas Series materialization): each batch
-    is two zero-copy int64 views and each output is one RecordBatch
-    built straight from the NumPy pair arrays — the per-batch Python
-    cost is the NumPy kernel alone.
-
-    Three output modes:
-    - plain (both extras None): the wedge stream (a, b, c) for the
-      downstream close join;
-    - bloom only: wedges surviving the fused close-key Bloom
-      pre-filter (non-closing wedges die before the Arrow hand-back);
+    is two zero-copy int64 views — the per-batch Python cost is the
+    NumPy kernel alone. No wedge ever leaves the kernel; two output
+    modes:
     - ``edge_set_name`` set (IN-KERNEL EXACT CLOSE): wedges are probed
-      against the mmap'd oriented edge set (behind the Bloom when one
-      is given) and the kernel emits finished id-canonical TRIANGLES —
-      or, with ``count_only``, one partial-count row per input
-      partition. No wedge ever leaves the kernel: the downstream
-      exchange + close join (round 3's N->4N bandwidth whale at
-      0.39-0.49 efficiency) ceases to exist.
-    - ``emit_pairs``: the counting scale path's residual-close input.
-      The anchor is dropped (a count never needs it) and the surviving
-      (b, c) pairs are BUFFERED per partition and emitted ONCE at
-      end-of-partition, PRE-AGGREGATED to (key, multiplicity) — wedges
-      from different anchors in this partition that share a closing
-      pair collapse to one shuffled row (round-5 map-side combine; the
-      buffer is ~16 B/survivor, ~T/P rows — MBs per task at any scale).
-      With ``pack_pairs`` (caller guarantees ids < 2^31) the key is the
-      single int64 ``(b << 32) | c`` — half the exchanged key bytes and
-      a one-word join key; past 2^31 ids it falls back to (b, c, m).
+      against the mmap'd oriented edge set and the kernel emits one
+      partial-count row per input partition — no wedge exchange, no
+      close join.
+    - ``bloom_state`` set (the scale path's residual-close input): the
+      (b, c) pairs surviving the fused Bloom probe are BUFFERED per
+      partition and emitted ONCE at end-of-partition, PRE-AGGREGATED
+      to (key, multiplicity) — wedges from different anchors in this
+      partition that share a closing pair collapse to one shuffled row
+      (the buffer is ~16 B/survivor, ~T/P rows — MBs per task at any
+      scale). With ``pack_pairs`` (caller guarantees ids < 2^31) the
+      key is the single int64 ``(b << 32) | c`` — half the exchanged
+      key bytes and a one-word join key; past 2^31 ids it falls back
+      to (b, c, m).
     """
     import pyarrow as pa
 
     edge_set = _load_edge_set(edge_set_name) if edge_set_name else None
-    need_a = not (count_only or emit_pairs)
     pair_b: list[np.ndarray] = []
     pair_c: list[np.ndarray] = []
-
-    def np_col(batch: "pa.RecordBatch", name: str) -> np.ndarray:
-        return batch.column(name).to_numpy(zero_copy_only=False)
-
     total = 0
 
-    def out(lo: np.ndarray, hi: np.ndarray):
+    def close(lo: np.ndarray, hi: np.ndarray) -> None:
         nonlocal total
-        a, b, c = _run_pairs(lo, hi, need_a=need_a)
-        if b.size and bloom_value is not None:
-            mask = _bloom_mask(bloom_value, b, c)
-            b, c = b[mask], c[mask]
-            if need_a:
-                a = a[mask]
-        if edge_set is not None and b.size:
-            mask = _exact_close_mask(edge_set, b, c)
-            b, c = b[mask], c[mask]
-            if need_a:
-                a = a[mask]
-        if count_only:
-            total += int(b.size)
-            return None
-        if emit_pairs:
-            if not agg_pairs:  # A/B harness: round-4 raw pair stream
-                return pa.RecordBatch.from_arrays(
-                    [pa.array(b, type=pa.int64()), pa.array(c, type=pa.int64())],
-                    names=["b", "c"],
-                )
-            if b.size:
-                pair_b.append(b)
-                pair_c.append(c)
-            return None
+        b, c = _run_pairs(lo, hi)
+        if not b.size:
+            return
         if edge_set is not None:
-            # Finished triangles: canonicalize to a < b < c (the anchor
-            # is the lowest-DEGREE vertex, not the lowest id).
-            tri = np.sort(np.stack([a, b, c]), axis=0)
-            a, b, c = tri[0], tri[1], tri[2]
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array(a, type=pa.int64()),
-                pa.array(b, type=pa.int64()),
-                pa.array(c, type=pa.int64()),
-            ],
-            names=["a", "b", "c"],
-        )
+            total += int(np.count_nonzero(_exact_close_mask(edge_set, b, c)))
+        else:
+            mask = _bloom_mask(bloom_state, b, c)
+            pair_b.append(b[mask])
+            pair_c.append(c[mask])
 
     carry_lo = carry_hi = None
     for batch in batches:
-        lo = np_col(batch, "lo")
-        hi = np_col(batch, "hi")
+        lo = batch.column("lo").to_numpy(zero_copy_only=False)
+        hi = batch.column("hi").to_numpy(zero_copy_only=False)
         if carry_lo is not None and carry_lo.size:
             lo = np.concatenate([carry_lo, lo])
             hi = np.concatenate([carry_hi, hi])
@@ -578,160 +427,96 @@ def _csr_batch_iter(
         cut = int(np.searchsorted(lo, lo[-1], side="left"))
         carry_lo, carry_hi = lo[cut:], hi[cut:]
         if cut:
-            rb = out(lo[:cut], hi[:cut])
-            if rb is not None:
-                yield rb
+            close(lo[:cut], hi[:cut])
     if carry_lo is not None and carry_lo.size:
-        rb = out(carry_lo, carry_hi)
-        if rb is not None:
-            yield rb
-    if count_only:
+        close(carry_lo, carry_hi)
+    if edge_set is not None:
         yield pa.RecordBatch.from_arrays(
             [pa.array([total], type=pa.int64())], names=["n"]
         )
-    if emit_pairs and agg_pairs:
+    else:
         yield _agg_pairs_batch(pair_b, pair_c, pack_pairs)
 
 
 def _wedges_csr(
     oriented: DataFrame,
-    bloom_bc=None,
     edge_set_name: str | None = None,
-    count_only: bool = False,
-    emit_pairs: bool = False,
+    bloom_state: tuple | None = None,
     pack_pairs: bool = False,
-    agg_pairs: bool = True,
 ) -> DataFrame:
     csr = (
         oriented.select("lo", "hi", "hi_deg")
-        # explicit count: see _wedges_sql on AQE byte-based coalescing
+        # Explicit repartition count: the oriented table is small in
+        # BYTES, so AQE's byte-based coalescing would otherwise funnel
+        # the O(sum deg_out^2) wedge blowup through a handful of tasks
+        # (AQE never coalesces a user repartition with an explicit count).
         .repartition(_explode_parts(oriented), "lo")
         .sortWithinPartitions("lo", "hi_deg", "hi")
     )
-    def kernel(batches):
-        # blocked-bloom state is a tiny (tag, file, n_words) tuple —
-        # safe to close over; the bitmap itself is mmap'd per worker.
-        return _csr_batch_iter(
-            batches,
-            bloom_value=bloom_bc,
-            edge_set_name=edge_set_name,
-            count_only=count_only,
-            emit_pairs=emit_pairs,
-            pack_pairs=pack_pairs,
-            agg_pairs=agg_pairs,
-        )
 
-    if count_only:
+    def kernel(batches):
+        # The Bloom state is a tiny (file, n_words) tuple — safe to
+        # close over; the bitmap itself is mmap'd per worker.
+        return _csr_batch_iter(batches, edge_set_name, bloom_state, pack_pairs)
+
+    if edge_set_name:
         schema = "n long"
-    elif emit_pairs and not agg_pairs:
-        schema = "b long, c long"
-    elif emit_pairs:
-        schema = "k long, m long" if pack_pairs else "b long, c long, m long"
     else:
-        schema = _WEDGE_SCHEMA
+        schema = "k long, m long" if pack_pairs else "b long, c long, m long"
     return csr.mapInArrow(kernel, schema=schema)
 
 
-_WEDGE_KERNELS = {"sql": _wedges_sql, "join": _wedges_join, "csr": _wedges_csr}
-
-
-def triangles(
-    edges: DataFrame,
-    strategy: str = "join",
-    bloom_fpp: float | None = _BLOOM_FPP,
-    kernel_close: bool | None = None,
-) -> DataFrame:
+def triangles(edges: DataFrame) -> DataFrame:
     """Enumerate all triangles of the canonical undirected edge table.
 
     Returns (a, b, c) with a < b < c, one row per triangle, exactly.
 
-    For "csr" the close is IN-KERNEL by default (``kernel_close``,
-    auto below _KERNEL_CLOSE_EDGE_LIMIT): wedges probe the mmap'd exact
-    edge set inside the NumPy kernel and finished triangles come out —
-    no wedge exchange, no close join. For "join"/"sql" (and "csr" past
-    the limit or with ``kernel_close=False``), past
-    _BROADCAST_EDGE_LIMIT edges a Bloom filter of the closing keys
-    pre-filters the wedge stream before its exchange (see _BLOOM_FPP);
-    fused into the NumPy kernel for "csr", a pipelined Arrow stage for
-    "join"/"sql". ``bloom_fpp=None`` disables it (A/B harness).
+    Wedges come from the degree-oriented self-join; past
+    _BROADCAST_EDGE_LIMIT oriented edges the closing-key Bloom filter
+    drops non-closing wedges before the close join's exchange (see
+    _BLOOM_BITS_PER_KEY).
     """
-    # One materialization: both the wedge kernel and the close join read
+    # One materialization: both the wedge join and the close join read
     # the oriented table; without it the degree aggregation + two degree
     # joins run twice. The count is ~free on the checkpointed data and
     # drives the close-join broadcast decision.
     oriented = _oriented(edges).localCheckpoint(eager=True)
     n_edges = oriented.count()
-    bloom_bc = None
-    if bloom_fpp is not None and n_edges > _BROADCAST_EDGE_LIMIT:
-        bloom_bc = _close_filter_state(oriented, n_edges, bloom_fpp)
-    if strategy == "csr":
-        if kernel_close is None:
-            kernel_close = n_edges <= _kernel_close_limit(edges.sparkSession)
-        if kernel_close:
-            return _wedges_csr(
-                oriented, bloom_bc, edge_set_name=_edge_set_file(oriented)
-            )
-        wedges = _wedges_csr(oriented, bloom_bc)
-    else:
-        if strategy == "join":
-            wedges = _wedges_join(oriented, n_edges)
-        else:
-            wedges = _WEDGE_KERNELS[strategy](oriented)
-        if bloom_bc is not None:
-            wedges = wedges.mapInArrow(_bloom_probe(bloom_bc), _WEDGE_SCHEMA)
+    wedges = _wedges_join(oriented, n_edges)
+    if n_edges > _BROADCAST_EDGE_LIMIT:
+        state = _close_filter_state(oriented, n_edges)
+        wedges = wedges.mapInArrow(_bloom_probe(state), _WEDGE_SCHEMA)
     return _close_wedges(wedges, oriented, n_edges)
 
 
-def triangle_count(edges: DataFrame, strategy: str = "kernel") -> int:
-    """Exact triangle count.
+def triangle_count(edges: DataFrame) -> int:
+    """Exact triangle count through the Arrow-CSR kernel, two regimes:
 
-    Default "kernel" (round 4), two regimes:
-
-    - <= _BROADCAST_EDGE_LIMIT: the csr wedge kernel probes the mmap'd
-      exact edge set and emits ONE partial-count row per partition —
-      no wedge row is ever materialized outside a NumPy register file,
-      no exchange, no close join; the only shuffle is the P-row count
-      aggregate. (The edge-set build is a serial driver pass, fine at
-      this size.)
+    - <= _BROADCAST_EDGE_LIMIT: the kernel probes the mmap'd exact edge
+      set and emits ONE partial-count row per partition — no wedge row
+      is ever materialized outside a NumPy register file, no exchange,
+      no close join; the only shuffle is the P-row count aggregate.
+      (The edge-set build is a serial driver pass, fine at this size.)
     - past it: the SCALE path. The serial edge-set build would become
       the Amdahl floor (measured: flat ~40 s at 37M edges, collapsing
       the 1 -> 4 executor efficiency to ~0.2 even as absolute walls
       improved), so instead the kernel fuses the Bloom close-key
-      pre-filter and emits only the surviving closing pairs — the
-      anchor column is dropped, counting never needs it — PRE-
-      AGGREGATED per partition to (pair, wedge multiplicity) and (when
-      ids < 2^31, checked) PACKED into one int64 key, halving the
+      pre-filter and emits only the surviving closing pairs,
+      PRE-AGGREGATED per partition to (pair, wedge multiplicity) and
+      (when ids < 2^31, checked) PACKED into one int64 key, halving the
       exchanged key bytes; one bounded shuffled-hash join against the
       identically-keyed oriented edge set removes the Bloom false
       positives and sum(m) over the matches is the exact count. Every
-      stage fans out; since round 5 even the Bloom partial merge runs
-      executor-side (bloom.build_blocked_bloom), so no serial driver
-      term remains.
+      stage fans out, the Bloom partial merge included
+      (bloom.build_blocked_bloom), so no serial driver term remains.
     """
-    if strategy != "kernel":
-        return triangles(edges, strategy).count()
     oriented = _oriented(edges).localCheckpoint(eager=True)
     n_edges = oriented.count()
     if n_edges <= _BROADCAST_EDGE_LIMIT:
-        partials = _wedges_csr(
-            oriented, None, edge_set_name=_edge_set_file(oriented), count_only=True
-        )
+        partials = _wedges_csr(oriented, edge_set_name=_edge_set_file(oriented))
         row = partials.agg(F.coalesce(F.sum("n"), F.lit(0)).alias("n")).collect()[0]
         return int(row["n"])
-    bloom_bc = _close_filter_state(oriented, n_edges, _BLOOM_FPP)
-    import os as _os
-
-    if _os.environ.get("LINKGRAPH_TRI_PREAGG", "1") == "0":
-        # A/B harness: the round-4 shape — raw un-aggregated (b, c)
-        # pair stream into the residual join, counted by rows.
-        pairs = _wedges_csr(oriented, bloom_bc, emit_pairs=True, agg_pairs=False)
-        closing = oriented.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
-        if _shj_safe(oriented.sparkSession, n_edges):
-            closing = closing.hint("shuffle_hash")
-        else:
-            parts = _shj_parts(oriented.sparkSession, n_edges)
-            closing = closing.repartition(parts, "b", "c").hint("shuffle_hash")
-        return pairs.join(closing, ["b", "c"]).count()
+    state = _close_filter_state(oriented, n_edges)
     # Packed single-int64 join key iff every id fits 31 bits (exact —
     # (b << 32) | c is injective there). The max() is ~free on the
     # checkpointed table.
@@ -739,7 +524,7 @@ def triangle_count(edges: DataFrame, strategy: str = "kernel") -> int:
         F.greatest(F.max("lo"), F.max("hi")).alias("mx")
     ).first()["mx"]
     pack = max_id is not None and int(max_id) < (1 << 31)
-    pairs = _wedges_csr(oriented, bloom_bc, emit_pairs=True, pack_pairs=pack)
+    pairs = _wedges_csr(oriented, bloom_state=state, pack_pairs=pack)
     if pack:
         # hi < 2^31 makes | equivalent to +; Catalyst has no int OR on
         # longs cheaper than this shiftleft + add.
@@ -779,7 +564,7 @@ def vertex_triangle_count(tri: DataFrame) -> DataFrame:
     )
 
 
-def clustering_coefficient(edges: DataFrame, strategy: str = "join") -> DataFrame:
+def clustering_coefficient(edges: DataFrame) -> DataFrame:
     """Local clustering coefficient per vertex: (id, degree, n_triangles, lcc).
 
     lcc = 2 * triangles(v) / (deg(v) * (deg(v) - 1)); vertices with
@@ -787,7 +572,7 @@ def clustering_coefficient(edges: DataFrame, strategy: str = "join") -> DataFram
     profile (degree-ordered wedges, O(sqrt(2m)) bound per vertex) is
     identical to ``triangles`` plus one broadcast-friendly aggregation.
     """
-    tri_per_v = vertex_triangle_count(triangles(edges, strategy))
+    tri_per_v = vertex_triangle_count(triangles(edges))
     deg = E.degrees(edges)
     joined = deg.join(tri_per_v, "id", "left_outer").select(
         "id",
@@ -803,7 +588,7 @@ def clustering_coefficient(edges: DataFrame, strategy: str = "join") -> DataFram
     )
 
 
-def transitivity(edges: DataFrame, strategy: str = "join") -> DataFrame:
+def transitivity(edges: DataFrame) -> DataFrame:
     """Global clustering coefficient, one row:
     (n_triangles, n_wedges, transitivity = 3 * triangles / wedges).
 
@@ -811,7 +596,7 @@ def transitivity(edges: DataFrame, strategy: str = "join") -> DataFrame:
     sum over v of C(deg(v), 2) — one degree aggregation plus a scalar
     fold, so the cost beyond the triangle kernel is negligible.
     """
-    n_tri = triangle_count(edges, strategy)
+    n_tri = triangle_count(edges)
     deg = E.degrees(edges)
     wedges = deg.agg(
         F.coalesce(

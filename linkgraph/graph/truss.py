@@ -27,7 +27,7 @@ Spark-first changes vs the reference:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -284,7 +284,12 @@ def max_truss(
     cur_n: int | None = None           # |graph| (broadcast gate bound)
     probes: list[dict] = []
     while k != max_k and k != min_k:
-        ckpt = checkpointer or Checkpointer(spark, job=f"maxtruss_k{k}")
+        # One job per probe: a shared durable job would make each probe's
+        # k_truss resume from the PREVIOUS probe's last superstep.
+        if checkpointer is None:
+            ckpt = Checkpointer(spark, job=f"maxtruss_k{k}")
+        else:
+            ckpt = replace(checkpointer, job=f"{checkpointer.job}_k{k}", history=[])
         # degree prune before each probe (MaximalTruss.scala:28)
         from linkgraph.graph.edges import degrees
 

@@ -1,9 +1,8 @@
-"""Bloom pre-filter: NumPy probe parity with the JVM sketch, and
-triangle parity with the bloom path forced on.
+"""Blocked Bloom pre-filter: NumPy xxhash64 parity with the JVM, the
+filter's own contract, and triangle parity with the Bloom path forced on.
 
-The probe replicates two public hash algorithms bit-for-bit
-(Catalyst xxhash64 over longs; sketch Murmur3_x86_32.hashLong) — the
-parity tests here are the contract that keeps the NumPy side honest
+The probe recomputes Catalyst's xxhash64 over longs bit-for-bit — the
+parity test here is the contract that keeps the NumPy side honest
 against the JVM build side.
 """
 
@@ -14,8 +13,8 @@ import pytest
 from pyspark.sql import functions as F
 
 import linkgraph.graph.triangles as tri_mod
-from linkgraph.bloom import build_long_bloom, parse_bloom_bytes, xxhash64_longs
-from tests.conftest import TRUSS_MINI, edge_df
+from linkgraph.bloom import xxhash64_longs
+from tests.conftest import gnp_graph
 
 from linkgraph.graph.edges import canonicalize
 
@@ -43,53 +42,30 @@ def test_xxhash64_matches_jvm(pairs):
     assert np.array_equal(jvm1, xxhash64_longs([a]).view(np.int64))
 
 
-def test_bloom_probe_matches_jvm(pairs):
-    a, b, df = pairs
-    sk = build_long_bloom(df, ["a", "b"], 2000, 0.01)
-    items = xxhash64_longs([a, b])
-    # no false negatives, ever
-    assert sk.might_contain_longs(items).all()
-    # bit-exact agreement with the JVM object on non-members
-    jbf = df.select(F.xxhash64("a", "b").alias("k"))._jdf.stat().bloomFilter(
-        "k", 2000, 0.01
-    )
-    rng = np.random.default_rng(12)
-    others = xxhash64_longs(
-        [
-            rng.integers(-(2**62), 2**62, 3000, dtype=np.int64),
-            rng.integers(-(2**62), 2**62, 3000, dtype=np.int64),
-        ]
-    )
-    py_mask = sk.might_contain_longs(others)
-    jvm_mask = np.array([jbf.mightContainLong(int(np.int64(x))) for x in others])
-    assert np.array_equal(py_mask, jvm_mask)
-    # fpp in the right ballpark (sized for 1%)
-    assert py_mask.mean() < 0.05
-
-
-def test_parse_rejects_unknown_version():
-    with pytest.raises(ValueError):
-        parse_bloom_bytes(b"\x00\x00\x00\x63" + b"\x00" * 12)
-
-
 def test_triangles_bloom_path_parity(spark, monkeypatch):
-    graph = canonicalize(edge_df(spark, TRUSS_MINI))
+    """Past the broadcast limit both triangle paths pre-filter with the
+    closing-key Bloom filter. At 1 bit/key on a few thousand edges the
+    filter passes many non-closing wedges; the exact close must remove
+    every one of them."""
+    graph = canonicalize(gnp_graph(spark, n=300, p=0.06, seed=5)).cache()
     want = sorted(map(tuple, tri_mod.triangles(graph).collect()))
-    assert len(want) == 22
-    # Force the bloom gate open (limit 0) at a high fpp so false
-    # positives actually occur and must be removed by the close join.
+    want_n = tri_mod.triangle_count(graph)
+    assert want_n == len(want) > 0
     monkeypatch.setattr(tri_mod, "_BROADCAST_EDGE_LIMIT", 0)
-    for strategy in ("join", "sql", "csr"):
-        got = sorted(
-            map(
-                tuple,
-                tri_mod.triangles(graph, strategy=strategy, bloom_fpp=0.3).collect(),
-            )
-        )
-        assert got == want, strategy
-
-
-# ------------------------------------------ blocked Bloom (round 4)
+    monkeypatch.setattr(tri_mod, "_BLOOM_BITS_PER_KEY", 1)
+    oriented = tri_mod._oriented(graph).localCheckpoint(eager=True)
+    n_edges = oriented.count()
+    assert n_edges > 2000
+    state = tri_mod._close_filter_state(oriented, n_edges)
+    probed = tri_mod._wedges_join(oriented, n_edges).mapInArrow(
+        tri_mod._bloom_probe(state), tri_mod._WEDGE_SCHEMA
+    )
+    assert probed.count() > len(want)  # false positives reach the close
+    assert sorted(map(tuple, tri_mod.triangles(graph).collect())) == want
+    pairs = tri_mod._wedges_csr(oriented, bloom_state=state, pack_pairs=True)
+    assert pairs.agg(F.sum("m")).first()[0] > len(want)
+    assert tri_mod.triangle_count(graph) == want_n
+    graph.unpersist()
 
 
 def test_blocked_bloom_no_false_negatives_and_fpp(spark):

@@ -33,7 +33,7 @@ def _args(mode, inp, **kw):
 def test_triangle_modes_agree(spark, mini_txt):
     counts = {
         m: run(_args(m, mini_txt), spark).count()
-        for m in ("triangle", "triangleNoSpark", "trianglecsr")
+        for m in ("triangle", "triangleNoSpark")
     }
     assert set(counts.values()) == {22}
 

@@ -1,7 +1,7 @@
 """Force the at-scale code paths and assert parity with the small-scale
 defaults.
 
-The engine switches strategy on size thresholds that small fixtures
+The engine switches plans on size thresholds that small fixtures
 never cross: PageRank/LPA broadcast the per-vertex state only while
 |V| <= 5M (past it: co-partitioned shuffle join), and the triangle
 close join broadcasts the oriented edges only while |E| <= 20M (past
@@ -58,21 +58,19 @@ def test_triangle_close_shuffle_mode_matches_broadcast(spark, graph, monkeypatch
     # Past the broadcast limit but under the SHJ build gate: the close
     # join takes the forced shuffle_hash path.
     monkeypatch.setattr(tri_mod, "_BROADCAST_EDGE_LIMIT", 0)
-    for strategy in ("join", "sql", "csr"):
-        got = sorted(map(tuple, tri_mod.triangles(graph, strategy=strategy).collect()))
-        assert got == want and len(got) == 22
+    got = sorted(map(tuple, tri_mod.triangles(graph).collect()))
+    assert got == want and len(got) == 22
     # Past BOTH gates: the 1e9-edge plan — oriented table repartitioned
     # to a count that bounds the hash build, wedge stream hashed, and no
     # SortMergeJoin anywhere (the wedge side must never be sorted).
     monkeypatch.setattr(tri_mod, "_SHJ_BUILD_ROWS_LIMIT", 0)
-    for strategy in ("join", "sql", "csr"):
-        tri = tri_mod.triangles(graph, strategy=strategy)
-        got = sorted(map(tuple, tri.collect()))
-        assert got == want and len(got) == 22
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            tri.explain("formatted")
-        assert "SortMergeJoin" not in buf.getvalue(), strategy
+    tri = tri_mod.triangles(graph)
+    got = sorted(map(tuple, tri.collect()))
+    assert got == want and len(got) == 22
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        tri.explain("formatted")
+    assert "SortMergeJoin" not in buf.getvalue()
 
 
 def test_bucketed_checkpoint_join_is_exchange_free_on_state(spark, tmp_path):

@@ -1,4 +1,7 @@
-"""Golden triangle counts (FIXTURES.md §1, §3) across all three kernels."""
+"""Golden triangle counts (FIXTURES.md §1, §3) through both triangle
+paths: ``join``, the degree-oriented self-join enumerator behind
+``triangles()`` (counted by rows), and ``csr``, the Arrow-CSR kernel
+behind ``triangle_count()``."""
 
 from __future__ import annotations
 
@@ -16,7 +19,11 @@ from tests.conftest import (
     star_graph,
 )
 
-STRATEGIES = ["sql", "join", "csr"]
+PATHS = ["join", "csr"]
+
+
+def count_via(edges, path):
+    return triangles(edges).count() if path == "join" else triangle_count(edges)
 
 
 def brute_triangles(pairs):
@@ -31,36 +38,37 @@ def brute_triangles(pairs):
     return tris
 
 
-@pytest.mark.parametrize("strategy", STRATEGIES)
-def test_truss_mini_22(truss_mini, strategy):
-    assert triangle_count(truss_mini, strategy) == 22
+@pytest.mark.parametrize("path", PATHS)
+def test_truss_mini_22(truss_mini, path):
+    assert count_via(truss_mini, path) == 22
 
 
-@pytest.mark.parametrize("strategy", STRATEGIES)
-def test_small_twitter_5(small_twitter, strategy):
-    assert triangle_count(small_twitter, strategy) == 5
+@pytest.mark.parametrize("path", PATHS)
+def test_small_twitter_5(small_twitter, path):
+    assert count_via(small_twitter, path) == 5
 
 
-@pytest.mark.parametrize("strategy", STRATEGIES)
+@pytest.mark.parametrize("path", PATHS)
 @pytest.mark.parametrize("n", [5, 6, 8])
-def test_complete_graph(spark, strategy, n):
-    assert triangle_count(canonicalize(complete_graph(spark, n)), strategy) == math.comb(
-        n, 3
-    )
+def test_complete_graph(spark, path, n):
+    assert count_via(canonicalize(complete_graph(spark, n)), path) == math.comb(n, 3)
 
 
-@pytest.mark.parametrize("strategy", STRATEGIES)
-def test_triangle_free(spark, strategy):
-    assert triangle_count(canonicalize(path_graph(spark, 10)), strategy) == 0
-    assert triangle_count(canonicalize(star_graph(spark, 12)), strategy) == 0
+@pytest.mark.parametrize("path", PATHS)
+def test_triangle_free(spark, path):
+    assert count_via(canonicalize(path_graph(spark, 10)), path) == 0
+    assert count_via(canonicalize(star_graph(spark, 12)), path) == 0
 
 
-@pytest.mark.parametrize("strategy", STRATEGIES)
-def test_gnp_vs_bruteforce(spark, strategy):
+@pytest.mark.parametrize("path", PATHS)
+def test_gnp_vs_bruteforce(spark, path):
     edges = canonicalize(gnp_graph(spark, n=120, p=0.08, seed=42))
     pairs = [(r["src"], r["dst"]) for r in edges.collect()]
     expected = brute_triangles(pairs)
-    got = {(r["a"], r["b"], r["c"]) for r in triangles(edges, strategy).collect()}
+    if path == "csr":
+        assert triangle_count(edges) == len(expected)
+        return
+    got = {(r["a"], r["b"], r["c"]) for r in triangles(edges).collect()}
     assert got == expected
 
 
@@ -118,25 +126,11 @@ def test_clustering_coefficient_vs_bruteforce(spark):
         assert math.isclose(got[v][2], expect[v][2], abs_tol=1e-12)
 
 
-@pytest.mark.parametrize("block", [1, 2, 3])
-def test_sql_kernel_salt_blocks(spark, block):
-    """Tiny salt blocks force multi-block pair generation per vertex;
-    enumeration must stay exact and duplicate-free (K8: every vertex's
-    adjacency spans several blocks at block<=3)."""
-    from linkgraph.graph.triangles import _close_wedges, _oriented, _wedges_sql
-
-    edges = canonicalize(complete_graph(spark, 8))
-    oriented = _oriented(edges)
-    tri = _close_wedges(_wedges_sql(oriented, block=block), oriented)
-    rows = [(r["a"], r["b"], r["c"]) for r in tri.collect()]
-    assert len(rows) == len(set(rows)) == math.comb(8, 3)
-
-
 # ------------------------------------------- in-kernel exact close (round 4)
 
 
 def test_kernel_count_golden(truss_mini, small_twitter):
-    # default strategy="kernel": count-only CSR kernel, no close join
+    # in-kernel exact close: count-only CSR kernel, no close join
     assert triangle_count(truss_mini) == 22
     assert triangle_count(small_twitter) == 5
 
@@ -148,48 +142,15 @@ def test_kernel_count_vs_bruteforce(spark):
 
 
 def test_kernel_count_with_bloom_prefilter(spark, monkeypatch):
-    """Forcing the Bloom limit to 0 exercises bloom-then-exact inside
-    the kernel; the count must stay exact (bloom only pre-drops)."""
+    """Forcing the broadcast limit to 0 takes the scale path (Bloom
+    fused into the kernel, pre-aggregated pairs, residual join); the
+    count must stay exact (the Bloom only pre-drops)."""
     import linkgraph.graph.triangles as T
 
     edges = canonicalize(gnp_graph(spark, n=100, p=0.1, seed=3))
     want = triangle_count(edges)
     monkeypatch.setattr(T, "_BROADCAST_EDGE_LIMIT", 0)
     assert T.triangle_count(edges) == want
-
-
-def test_kernel_count_fallback_past_limit(truss_mini, monkeypatch):
-    """Past _KERNEL_CLOSE_EDGE_LIMIT the kernel count must fall back to
-    the join-enumeration count and stay exact."""
-    import linkgraph.graph.triangles as T
-
-    monkeypatch.setattr(T, "_KERNEL_CLOSE_EDGE_LIMIT", 0)
-    assert T.triangle_count(truss_mini) == 22
-
-
-def test_csr_enumeration_kernel_close_with_bloom(spark, monkeypatch):
-    """csr + kernel_close + forced bloom: finished triangles out of the
-    kernel equal the join-strategy enumeration."""
-    import linkgraph.graph.triangles as T
-
-    edges = canonicalize(gnp_graph(spark, n=100, p=0.1, seed=9))
-    want = {(r["a"], r["b"], r["c"]) for r in T.triangles(edges, "join").collect()}
-    monkeypatch.setattr(T, "_BROADCAST_EDGE_LIMIT", 0)
-    got_rows = T.triangles(edges, "csr", kernel_close=True).collect()
-    got = [(r["a"], r["b"], r["c"]) for r in got_rows]
-    assert set(got) == want
-    assert len(got) == len(want)  # no duplicates
-    assert all(a < b < c for a, b, c in got)
-
-
-def test_csr_kernel_close_off_matches(spark):
-    """kernel_close=False keeps the legacy wedge-stream + close join."""
-    edges = canonicalize(gnp_graph(spark, n=80, p=0.1, seed=11))
-    a = {(r["a"], r["b"], r["c"])
-         for r in triangles(edges, "csr", kernel_close=False).collect()}
-    b = {(r["a"], r["b"], r["c"])
-         for r in triangles(edges, "csr", kernel_close=True).collect()}
-    assert a == b
 
 
 def test_exact_close_mask_hash_windows():
@@ -325,19 +286,3 @@ def test_agg_pairs_batch_unit():
         e = _agg_pairs_batch([], [], pack=pack)
         assert e.num_rows == 0
 
-
-def test_kernel_close_limit_tracks_driver_memory(spark, monkeypatch):
-    import linkgraph.graph.triangles as T
-
-    assert T._parse_jvm_size("24g") == 24 * 1024**3
-    assert T._parse_jvm_size("16384m") == 16 * 1024**3
-    assert T._parse_jvm_size("1024") == 1024
-    # default 24g session keeps the measured constant ceiling
-    assert T._kernel_close_limit(spark) == T._KERNEL_CLOSE_EDGE_LIMIT
-    # a small driver lowers the auto threshold proportionally
-    class _FakeConf:
-        def get(self, k, d=None):
-            return "8g"
-    class _FakeSession:
-        conf = _FakeConf()
-    assert T._kernel_close_limit(_FakeSession()) == 8 * 1024**3 // 2 // 56

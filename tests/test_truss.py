@@ -108,6 +108,22 @@ def test_max_truss_k6_start_insensitive(spark, k0):
     assert len(canonical_pairs(res.edges)) == 15
 
 
+def test_max_truss_durable_k10(spark, tmp_path):
+    """A durable checkpointer gives every probe its own job: K10 probes
+    k = 4, 8, 16, 12, 10, 11, and the k = 10 probe must not resume from
+    the empty k = 12 table."""
+    from linkgraph.checkpoint import Checkpointer
+
+    k10 = canonicalize(complete_graph(spark, 10))
+    ckpt = Checkpointer(spark, dir=str(tmp_path), job="maxtruss")
+    res = max_truss(k10, checkpointer=ckpt)
+    assert res.k == 10
+    assert len(canonical_pairs(res.edges)) == 45
+    assert [(p["k"], p["edges"]) for p in res.probes] == [
+        (4, 45), (8, 45), (16, 0), (12, 0), (10, 45), (11, 0)
+    ]
+
+
 def test_max_truss_reuses_probe_triangles(spark, truss_mini, monkeypatch):
     """After the first probe, binary-search probes filter the previous
     fixpoint's triangle table instead of re-enumerating wedges."""
